@@ -19,9 +19,15 @@ guarantee) — is proven end-to-end without a broker:
 tests/test_streaming.py::test_keyed_stream_per_key_order_to_state_store
 interleaves two keys over the live TCP transport and asserts each
 key's exact producer order at the state store, across micro-batches.
-The mechanism (stable pre-state sort on the grouping key over
-in-order upstream partitions) transfers verbatim to the Kafka path;
-only the literal broker is missing from this image.
+The mechanism is a stable pre-state sort on the grouping key over
+upstream partitions that are each read in arrival order. Spark's socket
+source deals a batch's lines round-robin over its input partitions, so
+``stream_trip_events_socket`` pins it to one partition to keep that
+order (see its docstring). On the Kafka path each topic-partition is
+one input partition read in offset order, and the key-hashed producer
+partitioner puts all of a key's records in one topic-partition, so the
+argument transfers verbatim; only the literal broker is missing from
+this image.
 """
 
 from __future__ import annotations

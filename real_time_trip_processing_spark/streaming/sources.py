@@ -173,6 +173,17 @@ def stream_trip_events_socket(spark, host: str, port: int) -> DataFrame:
     the file and Kafka flavors use — swapping the transport changes
     one line, not the pipeline.
 
+    Arrival order: every micro-batch reaches ``parse_kafka_like`` in the
+    order its lines arrived on the connection. Spark's socket source
+    deals a batch's lines round-robin over ``numPartitions`` input
+    partitions (line *i* → partition *i mod N*, N defaulting to
+    ``defaultParallelism``); downstream, the stateful operator's stable
+    pre-state sort keeps map-partition order, so a key's records would
+    read back as ``0,2,4,…,1,3,5,…``. Pinning ``numPartitions`` to 1
+    makes the batch one input partition read in arrival order, and the
+    narrow decode keeps it. The lines come off one connection on the
+    driver anyway, so the wider deal bought no parallel read.
+
     Test harness only at this repo's scale (the socket source is
     single-connection, no replay); production transport stays Kafka
     (``streaming/sinks.py`` documents the jar gate)."""
@@ -180,6 +191,7 @@ def stream_trip_events_socket(spark, host: str, port: int) -> DataFrame:
         spark.readStream.format("socket")
         .option("host", host)
         .option("port", port)
+        .option("numPartitions", 1)
         .load()
     )
     return parse_kafka_like(raw)

@@ -6,6 +6,7 @@ batch path (SURVEY §7 phase 4)."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,15 @@ from real_time_trip_processing_spark.streaming import (
 from real_time_trip_processing_spark.streaming.kpis import streaming_kpi_daily
 
 DATA = "/root/reference/data"
+
+#: the reference's 4,999-trip CSVs are not vendored into this repo; the
+#: tests that replay or load them run wherever they exist (the same
+#: condition tests/test_reference_golden.py gates on), the rest of this
+#: module needs no reference data
+needs_reference_data = pytest.mark.skipif(
+    not os.path.isdir(f"{DATA}/Trip_Start"),
+    reason=f"reference data not present: {DATA}/Trip_Start",
+)
 
 
 @pytest.fixture(scope="module")
@@ -56,6 +66,7 @@ def _run_stream(spark, df, name: str, mode: str = "append"):
     return spark.sql(f"SELECT * FROM {name}")
 
 
+@needs_reference_data
 def test_foreach_batch_upsert_idempotent(spark, tmp_path, replay_dir):
     """S5/S6 exactly-once: foreachBatch + dynamic-partition overwrite.
     A replayed micro-batch (same batch_id after a simulated sink retry)
@@ -87,6 +98,7 @@ def test_foreach_batch_upsert_idempotent(spark, tmp_path, replay_dir):
     assert spark.read.parquet(out_dir).count() == n
 
 
+@needs_reference_data
 def test_stream_match_full_replay(spark, replay_dir):
     events = stream_trip_events(spark, replay_dir, max_files_per_trigger=1)
     starts, ends = split_start_end(events)
@@ -98,6 +110,7 @@ def test_stream_match_full_replay(spark, replay_dir):
     assert "end_record_id" in r  # collision rename survives streaming
 
 
+@needs_reference_data
 def test_stream_dedup_within_watermark(spark, tmp_path, replay_dir):
     # duplicate delivery (at-least-once): replay the same files twice
     import shutil, os
@@ -119,6 +132,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path, replay_dir):
     assert out.count() == 4999
 
 
+@needs_reference_data
 def test_finite_replay_outputs_identical(spark, replay_dir, tmp_path):
     """`finite_replay` (r12: skip the trailing no-data micro-batch of an
     availableNow replay) must be a pure end-of-replay overhead cut —
@@ -185,6 +199,7 @@ def test_finite_replay_outputs_identical(spark, replay_dir, tmp_path):
     assert len(base_rows) == 4999
 
 
+@needs_reference_data
 def test_streaming_kpi_matches_batch(spark, replay_dir, tmp_path):
     # two-stage, mirroring the reference's architecture around its raw
     # table (SURVEY §7 risks): stage 1 appends completed trips to a
@@ -224,6 +239,7 @@ def test_streaming_kpi_matches_batch(spark, replay_dir, tmp_path):
     assert got["minimum_fare"] == want["minimum_fare"]
 
 
+@needs_reference_data
 def test_stateful_matcher(spark, replay_dir):
     """The applyInPandasWithState matcher reproduces the join matcher's
     result: one completed record per trip, first-match-wins, explicit
@@ -245,6 +261,7 @@ def test_stateful_matcher(spark, replay_dir):
     assert abs(total - want) < 1e-6
 
 
+@needs_reference_data
 def test_daily_partitioned_lake_prunes(spark, tmp_path):
     """The partitioned lake layout delivers partition pruning: a
     one-day filter reads only that day's directory (PartitionFilters in
@@ -397,6 +414,7 @@ def test_late_event_dropped_after_watermark(spark, tmp_path):
     assert {r["trip_id"] for r in out.select("trip_id").collect()} == {"B"}
 
 
+@needs_reference_data
 def test_keyed_sink_roundtrip(spark):
     """S8: keyed JSON message projection round-trips through the
     TRIP_EVENT envelope parser (base64 leg = the Kinesis shape,
@@ -420,6 +438,7 @@ def test_keyed_sink_roundtrip(spark):
     assert a == b
 
 
+@needs_reference_data
 def test_stream_static_broadcast_enrichment(spark, replay_dir):
     """Stream-static join: each micro-batch joins against a static
     dimension with a per-batch broadcast — no streaming state, no
@@ -437,6 +456,7 @@ def test_stream_static_broadcast_enrichment(spark, replay_dir):
     assert legs == {"pickup": 4999, "dropoff": 4999}
 
 
+@needs_reference_data
 def test_tws_matcher(spark, replay_dir):
     """The transformWithStateInPandas matcher (Spark 4 arbitrary-state
     API v2, RocksDB-backed) reproduces the applyInPandasWithState
@@ -700,6 +720,7 @@ def test_tws_processor_timer_expiry_clears_state():
     assert not handle.states["deadline"].exists()
 
 
+@needs_reference_data
 def test_completion_notifier_publishes_sns_doc(spark, tmp_path, replay_dir):
     """SNS-publish analogue (reference step_functions.json:13-23): a
     StreamingQueryListener publishes {"messagekey1": "success"} with the
@@ -1502,14 +1523,19 @@ def test_keyed_stream_per_key_order_to_state_store(spark, tmp_path):
     in ARRIVAL order; both keys must read back in exact producer
     order while sharing every micro-batch.
 
-    Why the engine guarantees it (not luck): the socket batch is one
-    upstream partition read in arrival order; the narrow decode
-    preserves it; the pre-state sort orders by the GROUPING KEY only
-    and Spark's sorters (radix LSD / TimSort) are stable, so same-key
-    rows keep map-output order; micro-batches apply sequentially. The
-    same argument transfers to Kafka per-partition order with the
-    key-hashed producer partitioner — the production wiring
-    (write_kafka) keys messages exactly so."""
+    Why the engine guarantees it (not luck): Spark's socket source
+    deals a batch's lines round-robin over its input partitions, which
+    would interleave a key's records by partition;
+    stream_trip_events_socket restores arrival order by pinning the
+    source to ONE input partition (``numPartitions=1``), read in
+    arrival order. The narrow decode preserves it; the pre-state sort
+    orders by the GROUPING KEY only and Spark's sorters (radix LSD /
+    TimSort) are stable, so same-key rows keep map-output order;
+    micro-batches apply sequentially. The same argument transfers to
+    Kafka per-partition order with the key-hashed producer partitioner
+    (each topic-partition is one input partition read in offset
+    order) — the production wiring (write_kafka) keys messages exactly
+    so."""
     import base64
     import json
     import socket
@@ -1542,12 +1568,19 @@ def test_keyed_stream_per_key_order_to_state_store(spark, tmp_path):
     srv.listen(1)
     port = srv.getsockname()[1]
 
+    first_rows_seen = threading.Event()
+
     def feed():
         conn, _ = srv.accept()
         with conn:
-            for e in events:
+            for j, e in enumerate(events):
                 payload = base64.b64encode(json.dumps(e).encode()).decode()
                 conn.sendall((payload + "\n").encode())
+                if j == 1:
+                    # hold the rest back until the first pair has been
+                    # committed, so the records cannot all land in one
+                    # micro-batch
+                    first_rows_seen.wait(60)
                 _time.sleep(0.25)  # spread across several micro-batches
             _time.sleep(90)
 
@@ -1606,6 +1639,8 @@ def test_keyed_stream_per_key_order_to_state_store(spark, tmp_path):
                 "SELECT trip_id, arrival_order, n FROM keyed_order"
             ).collect()
             batches_seen = len(rows)
+            if rows:
+                first_rows_seen.set()
             done = {}
             for r in rows:  # latest (longest) record per key
                 if r["n"] >= done.get(r["trip_id"], (0, ""))[0]:
